@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.{CollectLimitExec, FileSourceScanExec, GlobalLimitExec, LocalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
@@ -63,7 +64,7 @@ object PlanAudit {
     * BroadcastExchange whose build side reaches a corpus-sized scan (the
     * fact tables and the corpus-derived stored fixtures — never the
     * bounded dims like buckets/nation or the mutation-sized `incoming`
-    * batch) with NO row-limiting operator on the path: an aggregate
+    * batch) with NO row-limiting operator on the path: a final aggregate
     * (rows := group count) or a limit. Filters deliberately do NOT count
     * as limiting — a filter-only reduction is exactly the
     * estimate-trusting shape the detector exists to surface.
@@ -93,12 +94,22 @@ object PlanAudit {
     CorpusScanNames.contains(n) || CorpusScanPrefixes.exists(n.startsWith)
   }
 
+  /** An aggregate bounds its output to the group count only once its
+    * groups are complete: a Final- or Complete-mode aggregate. A partial
+    * one emits per-task partial groups — near input-sized at high group
+    * cardinality — and so does a PartialMerge over (group, distinct) keys.
+    * An aggregate with no aggregate functions (a distinct) is final iff it
+    * requires its child clustered, which only the post-shuffle side does. */
+  private def boundsRows(a: BaseAggregateExec): Boolean =
+    if (a.aggregateExpressions.isEmpty) a.requiredChildDistributionExpressions.isDefined
+    else a.aggregateExpressions.exists(e => e.mode == Final || e.mode == Complete)
+
   /** Corpus-sized scans reachable from `p` without crossing a row-limiting
     * operator, as (name, scanBytes). Descends through AQE wrappers, reused
-    * exchanges and cached relations; joins are walked on BOTH children (a
-    * semi/inner join does not bound its streamed side). */
+    * exchanges, cached relations and partial aggregates; joins are walked
+    * on BOTH children (a semi/inner join does not bound its streamed side). */
   def unboundedCorpusScans(p: SparkPlan): Seq[(String, Long)] = p match {
-    case _: BaseAggregateExec => Nil
+    case a: BaseAggregateExec if boundsRows(a) => Nil
     case _: GlobalLimitExec | _: LocalLimitExec |
          _: TakeOrderedAndProjectExec | _: CollectLimitExec => Nil
     case f: FileSourceScanExec =>

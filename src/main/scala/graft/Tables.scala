@@ -1,7 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftSqlBridge
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+
+import org.apache.hadoop.fs.Path
+
+import java.lang.ref.SoftReference
+import java.util.concurrent.ConcurrentHashMap
 
 /** Loaders for the driver testdata (TESTDATA.md / FIXTURES.md §A) plus the
   * reference-shaped metadata relations (FIXTURES.md §B) synthesized
@@ -21,7 +28,74 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Resolver(spark, s"$dir/$name.parquet")
+
+  /** Reads TIMESTAMP(NANOS) parquet columns as LongType; it changes the
+    * inferred schema, so the resolver keys on it. */
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The session's catalog of stored relations: path → (file stamp,
+    * analyzed relation). A `spark.read.parquet` lists the files and runs a
+    * schema-inference job; this runs it once per (session, path,
+    * `nanosAsLong`) until the files under the path change. Each call gets
+    * `newInstance()` of the stored relation, so its attribute IDs are fresh
+    * and self-joins / `df("col")` behave as with two separate reads. Only
+    * the resolution is reused: nothing is persisted, every action scans.
+    *
+    * Weak on the session. The stored relations reference their session, so
+    * the per-session map sits behind a soft reference: a dropped session's
+    * map is cleared under memory pressure and the session then collected. */
+  private object Resolver {
+    /** (name, length, mtime) of every file under the path, sorted; Spark
+      * part-file names change on every rewrite. Empty if the path is absent. */
+    private type Stamp = Seq[(String, Long, Long)]
+    private final case class Entry(stamp: Stamp, rel: LogicalRelation)
+    private type Entries = ConcurrentHashMap[(String, String), Entry]
+    private val bySession =
+      new java.util.WeakHashMap[SparkSession, SoftReference[Entries]]()
+
+    private def entries(spark: SparkSession): Entries = bySession.synchronized {
+      Option(bySession.get(spark)).flatMap(r => Option(r.get())).getOrElse {
+        val m = new Entries
+        bySession.put(spark, new SoftReference(m))
+        m
+      }
+    }
+
+    private def fs(spark: SparkSession, path: Path) =
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    /** `listStatus`, not `listFiles`: the located statuses `listFiles`
+      * builds load each local file's permissions by forking a process. */
+    private def stampOf(spark: SparkSession, path: Path): Stamp = {
+      val files = fs(spark, path)
+      def walk(p: Path): Seq[(String, Long, Long)] = files.listStatus(p).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      try walk(path).sorted
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }
+
+    def apply(spark: SparkSession, path: String): DataFrame = {
+      val m = entries(spark)
+      val key = (path, spark.conf.get(NanosAsLong, "false"))
+      val stamp = stampOf(spark, new Path(path))
+      val rel = Option(m.get(key)).filter(_.stamp == stamp).map(_.rel).getOrElse {
+        // a miss is where staged inputs turn over: forget deleted paths
+        m.keySet.removeIf { k => val p = new Path(k._1); !fs(spark, p).exists(p) }
+        val r = spark.read.parquet(path).queryExecution.analyzed match {
+          case r: LogicalRelation => r
+          case other => throw new IllegalStateException(
+            s"$path resolved to ${other.nodeName}, not a file relation")
+        }
+        m.put(key, Entry(stamp, r))
+        r
+      }
+      GraftSqlBridge.ofRows(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], rel.newInstance())
+    }
+  }
 
   /** Normalize a time column to a µs TimestampType instant equal to the
     * file's naive value read as UTC — the same contract as [[events]]'s
@@ -69,7 +143,7 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // tolerate a TIMESTAMP(NANOS) regen — a no-op on µs data
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NanosAsLong, "true")
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -152,7 +226,7 @@ object Tables {
       }
       w.mode("overwrite").parquet(out)
     }
-    spark.read.parquet(out)
+    Resolver(spark, out)
   }
 
   /** The `storage.objects` analog, synthesized from `lineitem` and stored

@@ -43,10 +43,14 @@ object GraftFunctions {
       args => MinHashMd5Sig(args(0), intLit(args(1), "minhash_md5_sig", "n"),
         intLit(args(2), "minhash_md5_sig", "k"))))
 
-  /** In-session registration (idempotent — re-registering replaces). */
-  def install(spark: SparkSession): Unit = fns.foreach { case (name, usage, b) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info(name, usage), b)
+  /** In-session registration of every function the session lacks, so a
+    * repeat call (or one after the extensions path) replaces nothing. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    fns.foreach { case (name, usage, b) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.registerFunction(FunctionIdentifier(name), info(name, usage), b)
+    }
   }
 
   /** `spark.sql.extensions` path. */

@@ -98,10 +98,15 @@ object IcebergCatalog {
     * Inputs: `snapshots` (table_id, snapshot_id, ts) — catalog metadata,
     * thousands of rows, broadcasts; `refs` (snapshot_id, file, bytes) —
     * the manifest-entry relation, the big side (file paths are
-    * table-relative: liveness is per (table, file)). Shape: one manifest
-    * scan fans into live/expired distinct file sets (partial-agg'd), the
-    * deletable set is the J2-style anti-join — no step holds more than the
-    * distinct-file relation, and nothing ever touches data bytes.
+    * table-relative: liveness is per (table, file)). Shape: one keyed
+    * aggregation of the manifest per (table, file) decides liveness and
+    * deletability — no step holds more than the distinct-file relation,
+    * and nothing ever touches data bytes.
+    *
+    * Precondition: `bytes` is a function of (table_id, file) — every
+    * manifest entry of one file carries the same size. Input that breaks
+    * it fails the call with an error naming the file, instead of counting
+    * one of its sizes.
     *
     * Returns one census row per table: (table_id, n_snapshots, n_expired,
     * n_live_files, n_deletable_files, deletable_bytes). */
@@ -130,7 +135,13 @@ object IcebergCatalog {
       .groupBy(col("table_id"), col("file"))
       .agg(max(when(!col("expired"), 1L).otherwise(0L)).as("has_live"),
         max(when(col("expired"), 1L).otherwise(0L)).as("has_expired"),
-        max(col("bytes")).as("bytes"))
+        min(col("bytes")).as("bytes_min"), max(col("bytes")).as("bytes"))
+      // the precondition, on a column every census row consumes
+      .withColumn("has_live", when(!(col("bytes_min") <=> col("bytes")),
+        raise_error(concat(lit("expireSnapshots: file "), col("file"),
+          lit(" of table "), col("table_id"),
+          lit(" has manifest entries with differing bytes"))))
+        .otherwise(col("has_live")))
     val snapC = flagged.groupBy(col("table_id")).agg(
       count(lit(1)).as("n_snapshots"),
       sum(when(col("expired"), 1L).otherwise(0L)).as("n_expired"))

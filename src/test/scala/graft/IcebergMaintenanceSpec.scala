@@ -48,6 +48,23 @@ class IcebergMaintenanceSpec extends SparkTestBase {
     assert(t2.getAs[Long]("deletable_bytes") == 500L)
   }
 
+  test("expireSnapshots: a file with differing bytes across entries fails loudly") {
+    val snaps = Seq(("t1", 1L, ts("1996-01-01 00:00:00")),
+      ("t1", 2L, ts("1998-01-01 00:00:00"))).toDF("table_id", "snapshot_id", "ts")
+    // b.parquet is live (snap 2), so its size reaches no deletable sum:
+    // the check must not depend on the file being deletable
+    val refs = Seq((1L, "a.parquet", 10L), (1L, "b.parquet", 20L), (2L, "b.parquet", 21L))
+      .toDF("snapshot_id", "file", "bytes")
+    val err = intercept[Exception] {
+      IcebergCatalog.expireSnapshots(snaps, refs,
+        to_timestamp(lit("1997-01-01 00:00:00"))).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(_.contains("file b.parquet of table t1 has manifest entries with differing bytes")),
+      msgs.mkString(" | "))
+  }
+
   test("expireSnapshots: nothing expires when every snapshot is recent") {
     val snaps = Seq(("t1", 1L, ts("1998-01-01 00:00:00")),
       ("t1", 2L, ts("1998-02-01 00:00:00"))).toDF("table_id", "snapshot_id", "ts")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,5 +62,28 @@ class PlanAuditSpec extends SparkTestBase {
       .filter(_.getName.endsWith(".parquet")).map(_.length).sum
     assert(reported.head._2 >= onDisk,
       s"scan bytes ${reported.head._2} below summed data files $onDisk")
+  }
+
+  // A partial aggregate emits per-task partial groups, near input-sized at
+  // high group cardinality: only the Final/Complete side bounds rows.
+  test("unboundedCorpusScans: a corpus scan under only a partial aggregate is flagged") {
+    val dir = java.nio.file.Files.createTempDirectory("planaudit").toString
+    val path = s"$dir/orders.parquet"
+    spark.range(1000).toDF("o_orderkey").write.mode("overwrite").parquet(path)
+    val corpus = spark.read.parquet(path)
+    Seq(corpus.groupBy(col("o_orderkey")).agg(sum(col("o_orderkey"))),
+        corpus.distinct()).foreach { df =>
+      val plan = df.queryExecution.executedPlan
+      assert(PlanAudit.unboundedCorpusScans(plan).isEmpty,
+        "the final aggregate bounds the whole plan")
+      val partials = PlanAudit.allNodes(plan).collect {
+        case a: BaseAggregateExec if a.requiredChildDistributionExpressions.isEmpty => a
+      }
+      assert(partials.nonEmpty, s"no partial aggregate in $plan")
+      partials.foreach { p =>
+        assert(PlanAudit.unboundedCorpusScans(p).map(_._1) == Seq("orders.parquet"),
+          s"the scan under ${p.nodeName} crosses only a partial aggregate")
+      }
+    }
   }
 }

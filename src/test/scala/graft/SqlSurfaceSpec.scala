@@ -30,6 +30,18 @@ class SqlSurfaceSpec extends SparkTestBase {
     assert(viaSql == viaApi)
   }
 
+  test("a repeat install keeps the registered functions") {
+    GraftFunctions.install(spark)
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")
+    val before = registry.lookupFunction(id)
+    GraftFunctions.install(spark)
+    // each registration builds a new ExpressionInfo: the same instance
+    // means the entry was left in place
+    assert(registry.lookupFunction(id).exists(i => before.exists(_ eq i)),
+      "the second install replaced vec_dot")
+  }
+
   test("non-literal n/k arguments are rejected with a clear error") {
     GraftFunctions.install(spark)
     val err = intercept[Exception] {
